@@ -14,8 +14,9 @@ Layers
   via ``mapInPandas`` -> shuffle of tiny serialized states -> final merge via
   ``groupBy().applyInPandas``.
 - ``dedup``      : the web-scale near-duplicate pipeline (extraction,
-  shingling, MinHash/LSH, SimHash verification, suffix-array containment,
-  connected-components clustering, lineage metrics, checkpoint/resume).
+  shingling, MinHash/LSH, SimHash verification, exact-substring containment
+  via CDC candidates and a winnowed L-gram verifier, connected-components
+  clustering, lineage metrics, checkpoint/resume).
 - ``textops``    : training-data-pipeline operators (exact dedup, n-gram
   Jaccard, embedding near-dup / ANN, language-ID, quality scoring, token
   counting, fingerprinting).

@@ -1,19 +1,18 @@
 """Content-defined chunking (CDC) for distributed exact-substring candidate
 generation.
 
-Why: a suffix array per host group has an inherent straggler (the largest
-host) and misses cross-host containment. CDC removes both: cut every
-document at positions where the 9-char rolling hash satisfies
+Cut every document at positions where the 9-char rolling hash satisfies
 ``roll % divisor == 0`` (content-defined, so two copies of the same text cut
 at the same content positions), hash each chunk's FULL content, and join on
 chunk hashes — any two documents sharing a verbatim region spanning at least
-one interior chunk land in the same bucket. O(total chars) work, perfectly
-parallel, shuffle volume ~ 16 bytes per ~divisor chars of text.
+one interior chunk land in the same bucket, whatever their hosts. O(total
+chars) work, perfectly parallel, shuffle volume ~ 16 bytes per ~divisor
+chars of text. The chunk hashes ride the signature stage's text pass
+(shingle_and_chunks_batch), so candidate generation never re-scans text.
 
-The suffix-array layer then runs only on the tiny candidate groups
-(suffix.sa_verify_pairs), turning it from a per-host monolith into a
-per-pair check — "suffix-array-based exact-substring dedup" with CDC doing
-the map-side pruning.
+Candidates are then decided by the winnowed L-gram verifier
+(suffix.sa_verify_pairs), whose suffix-array test oracle is
+suffix.shared_substring_pairs_pandas.
 
 Chunk content hashes are computed with an invertible-power prefix polynomial
 (mod 2^64): S[i] = sum c_j * Binv^j, hash(l, r) = (S[r] - S[l]) * B^r, all
@@ -22,15 +21,12 @@ vectorized; no per-chunk Python loop.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.materialize import materialize
-from pyspark.sql.types import LongType, StructField, StructType
 
 from .shingle import _BASE, splitmix64
 
@@ -252,54 +248,14 @@ def shingle_and_chunks_batch(
     return out_sh, out_ch
 
 
-CHUNK_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("chunk_hash", LongType())]
-)
-
-
-def chunk_stage(
-    extracted: DataFrame,
-    divisor: int = DEFAULT_DIVISOR,
-    min_chunk: int = DEFAULT_MIN_CHUNK,
-) -> DataFrame:
-    """(doc_id, text) -> exploded (doc_id, chunk_hash) rows."""
-    proj = extracted.select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ch = chunk_hashes_batch(pdf["text"], divisor, min_chunk)
-            lens = np.array([c.size for c in ch], dtype=np.int64)
-            if lens.sum() == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(pdf["doc_id"].to_numpy(), lens),
-                    "chunk_hash": np.concatenate(ch).view(np.int64),
-                }
-            )
-
-    return proj.mapInPandas(run, schema=CHUNK_SCHEMA)
-
-
-def substring_candidates(
-    extracted: DataFrame,
-    divisor: int = DEFAULT_DIVISOR,
-    min_chunk: int = DEFAULT_MIN_CHUNK,
-    max_bucket: int = 512,
-    chunks: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate substring-dup edges (a, b): docs sharing any CDC chunk.
-    Star edges per chunk bucket (O(bucket)); buckets larger than
-    ``max_bucket`` (mass boilerplate) are dropped — they represent content
-    shared by hundreds of documents, which the near-dup LSH layer already
-    handles; the cap is a documented precision/size guard.
-
-    ``chunks``: optional precomputed (doc_id, chunk_hash) rows — the
-    pipeline passes the signature stage's fused ``chunk_hashes`` column
-    (exploded JVM-side) so no second text scan happens; standalone callers
-    omit it and pay one ``chunk_stage`` pass over ``extracted``.
+def substring_candidates(chunks: DataFrame, max_bucket: int = 512) -> DataFrame:
+    """Candidate substring-dup edges (a, b): docs sharing any CDC chunk, from
+    (doc_id, chunk_hash) rows — the pipeline explodes the signature stage's
+    fused ``chunk_hashes`` column JVM-side. Star edges per chunk bucket
+    (O(bucket)); buckets larger than ``max_bucket`` (mass boilerplate) are
+    dropped — they represent content shared by hundreds of documents, which
+    the near-dup LSH layer already handles; the cap is a documented
+    precision/size guard.
 
     Bucket stats come from ONE window shuffle over the exploded chunk rows
     (count/min per chunk_hash), mirroring lsh.candidate_edges — the former
@@ -308,10 +264,9 @@ def substring_candidates(
     fixed cost at every parallelism level."""
     from pyspark.sql import Window
 
-    ch = chunks if chunks is not None else chunk_stage(extracted, divisor, min_chunk)
     w = Window.partitionBy("chunk_hash")
     chj = (
-        ch.withColumn("cnt", F.count("*").over(w))
+        chunks.withColumn("cnt", F.count("*").over(w))
         .withColumn("root", F.min("doc_id").over(w))
         .where((F.col("cnt") > 1) & (F.col("cnt") <= max_bucket))
     )

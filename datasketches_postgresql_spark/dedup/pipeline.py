@@ -7,8 +7,8 @@ per-partition + global sketch lineage metrics — the DataSketches heritage):
     signatures  shingles -> MinHash(128) + SimHash + per-batch theta partial
                 over the shingle hash space (distinct-shingle lineage)
     candidates  LSH banding -> star candidate edges
-    verified    signature-Jaccard + SimHash Hamming gate, UNION suffix-array
-                containment edges (grouped by host)
+    verified    signature-Jaccard + SimHash Hamming gate, UNION exact-substring
+                edges (CDC chunk candidates -> winnowed L-gram verifier)
     clusters    large-star/small-star connected components
     resolved    (doc_id, url, cluster_id, is_representative): representative
                 = min url per cluster (Window row_number)
@@ -29,13 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, DoubleType, StructField
 
-from ..operators.agg import sketch_groupby_agg
 from ..textops.analysis import quality_score
-from ..sketches import kll as _kll
 from ..sketches import theta as _theta
-from ..plans.materialize import materialize
 from ..sources.io import CheckpointStore
 from .cc import connected_components
 from .extract import canonicalize_stage, extract_blocks_stage, extract_stage
@@ -43,13 +39,7 @@ from .lsh import DEFAULT_BANDS, DEFAULT_ROWS, candidate_edges
 from .minhash import DEFAULT_NUM_PERM, signature_stage
 from .shingle import DEFAULT_SHINGLE_N
 from .chunking import DEFAULT_DIVISOR, DEFAULT_MIN_CHUNK, substring_candidates
-from .suffix import (
-    DEFAULT_MAX_GROUP_CHARS,
-    DEFAULT_MIN_MATCH_CHARS,
-    containment_edges,
-    fused_winnow_table,
-    sa_verify_pairs,
-)
+from .suffix import DEFAULT_MIN_MATCH_CHARS, fused_winnow_table, sa_verify_pairs
 from .verify import DEFAULT_JACCARD, DEFAULT_MAX_HAMMING, verify_edges
 
 
@@ -63,21 +53,12 @@ class DedupConfig:
     jaccard_threshold: float = DEFAULT_JACCARD
     max_hamming: int = DEFAULT_MAX_HAMMING
     sa_min_match_chars: int = DEFAULT_MIN_MATCH_CHARS
-    sa_max_group_chars: int = DEFAULT_MAX_GROUP_CHARS
-    enable_containment: bool = True
-    # "cdc": global content-defined-chunk candidates + per-pair SA verify
-    # (scale path, cross-host); "host_sa": per-host-group suffix array
-    substring_mode: str = "cdc"
     # ingestion salting: crawl data arrives host-clustered; re-hashing on
     # xxhash64(url) spreads any host uniformly before the per-doc stages
     # (0 = keep input partitioning)
     ingest_partitions: int = 0
     cdc_divisor: int = DEFAULT_DIVISOR
     cdc_min_chunk: int = DEFAULT_MIN_CHUNK
-    # fuse CDC chunk hashing into the signature stage's text pass (one scan
-    # of the corpus feeds both the near-dup and exact-substring layers);
-    # False = standalone chunk_stage second scan (the pre-fusion shape)
-    fuse_cdc: bool = True
     # which cluster member survives as the training-set document:
     #   "url"     — lexicographic minimum url (stable, cheapest);
     #   "quality" — highest textops quality_score, url tie-break (keep the
@@ -300,6 +281,28 @@ class DedupPipeline:
         self._recomputes += 1
         return out
 
+    # -- signatures (shared by run and run_incremental) -------------------------
+    def _signature_stage(self, name: str, extracted: DataFrame, resume: bool) -> DataFrame:
+        """Signature checkpoint whose text pass also emits the CDC chunk
+        hashes (and, under ``fuse_winnow``, the substring verifier's winnow
+        fingerprints), so the exact-substring layer never re-scans text for
+        its candidates."""
+        cfg = self.config
+        return self._stage(
+            name,
+            lambda: signature_stage(
+                extracted,
+                shingle_n=cfg.shingle_n,
+                num_perm=cfg.num_perm,
+                seed=cfg.minhash_seed,
+                bands=cfg.bands,
+                rows=cfg.rows,
+                cdc=(cfg.cdc_divisor, cfg.cdc_min_chunk),
+                winnow_chars=cfg.sa_min_match_chars if cfg.fuse_winnow else None,
+            ),
+            resume,
+        )
+
     # -- opt-in boilerplate-line cleaning tier ---------------------------------
     def _line_apply(self, blocks: DataFrame, freq: DataFrame) -> DataFrame:
         """blocks (line-structured text) -> line-deduped CANONICAL text in
@@ -365,22 +368,7 @@ class DedupPipeline:
             # cleaning lands in its own checkpoint; extracted stays raw
             extracted = self._line_clean_base(blocks, resume)
 
-        fuse = cfg.fuse_cdc and cfg.enable_containment and cfg.substring_mode == "cdc"
-        fuse_win = cfg.fuse_winnow and cfg.enable_containment and cfg.substring_mode == "cdc"
-        signatures = self._stage(
-            "signatures",
-            lambda: signature_stage(
-                extracted,
-                shingle_n=cfg.shingle_n,
-                num_perm=cfg.num_perm,
-                seed=cfg.minhash_seed,
-                bands=cfg.bands,
-                rows=cfg.rows,
-                cdc=(cfg.cdc_divisor, cfg.cdc_min_chunk) if fuse else None,
-                winnow_chars=cfg.sa_min_match_chars if fuse_win else None,
-            ),
-            resume,
-        )
+        signatures = self._signature_stage("signatures", extracted, resume)
         self._lineage_pass(signatures)
         self._metric("signatures", "rows", self._rows("signatures"))
         if cfg.bloom_prefilter:
@@ -397,38 +385,14 @@ class DedupPipeline:
             ver = verify_edges(
                 candidates, signatures, cfg.jaccard_threshold, cfg.max_hamming
             ).select("a", "b")
-            if cfg.enable_containment:
-                if cfg.substring_mode == "cdc":
-                    pre = (
-                        signatures.select(
-                            "doc_id",
-                            F.explode("chunk_hashes").alias("chunk_hash"),
-                        )
-                        if fuse
-                        else None
-                    )
-                    cand = substring_candidates(
-                        extracted, cfg.cdc_divisor, cfg.cdc_min_chunk, chunks=pre
-                    )
-                    win_tbl = (
-                        fused_winnow_table(signatures, cfg.sa_min_match_chars)
-                        if fuse_win
-                        else None
-                    )
-                    cont = sa_verify_pairs(
-                        cand,
-                        extracted,
-                        cfg.sa_min_match_chars,
-                        cfg.sa_max_group_chars,
-                        winnow_tbl=win_tbl,
-                    )
-                else:
-                    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-                    cont = containment_edges(
-                        extracted, host, cfg.sa_min_match_chars, cfg.sa_max_group_chars
-                    )
-                ver = ver.union(cont).distinct()
-            return ver
+            L = cfg.sa_min_match_chars
+            cont = sa_verify_pairs(
+                substring_candidates(_chunk_rows(signatures)),
+                extracted,
+                L,
+                winnow_tbl=fused_winnow_table(signatures, L) if cfg.fuse_winnow else None,
+            )
+            return ver.union(cont).distinct()
 
         verified = self._stage("verified", _verified, resume)
         self._metric("verified", "rows", self._rows("verified"))
@@ -566,22 +530,7 @@ class DedupPipeline:
                 f"cleaned_{batch_id}", lambda: self._line_apply(blocks_new, freq), resume
             )
 
-        fuse = cfg.fuse_cdc and cfg.enable_containment and cfg.substring_mode == "cdc"
-        fuse_win = cfg.fuse_winnow and cfg.enable_containment and cfg.substring_mode == "cdc"
-        sig_new = self._stage(
-            f"signatures_{batch_id}",
-            lambda: signature_stage(
-                ex_new,
-                shingle_n=cfg.shingle_n,
-                num_perm=cfg.num_perm,
-                seed=cfg.minhash_seed,
-                bands=cfg.bands,
-                rows=cfg.rows,
-                cdc=(cfg.cdc_divisor, cfg.cdc_min_chunk) if fuse else None,
-                winnow_chars=cfg.sa_min_match_chars if fuse_win else None,
-            ),
-            resume,
-        )
+        sig_new = self._signature_stage(f"signatures_{batch_id}", ex_new, resume)
         self._lineage_pass(sig_new, prefix=f"{batch_id}_")
         self._metric(f"signatures_{batch_id}", "rows", self._rows(f"signatures_{batch_id}"))
         if cfg.bloom_prefilter:
@@ -626,38 +575,23 @@ class DedupPipeline:
             ver = verify_edges(
                 candidates, sig_all, cfg.jaccard_threshold, cfg.max_hamming
             ).select("a", "b")
-            if cfg.enable_containment and cfg.substring_mode == "cdc" and fuse:
-                ch_new = sig_new.select(
-                    "doc_id", F.explode("chunk_hashes").alias("chunk_hash")
-                )
-                ch_old = old_sigs.select(
-                    "doc_id", F.explode("chunk_hashes").alias("chunk_hash")
-                ).join(ch_new.select("chunk_hash").distinct(), "chunk_hash", "left_semi")
-                cand_sub = substring_candidates(
-                    None,
-                    cfg.cdc_divisor,
-                    cfg.cdc_min_chunk,
-                    chunks=ch_new.unionByName(ch_old),
-                )
-                ex_all = old_extracted.select("doc_id", "url", "text").unionByName(
-                    ex_new.select("doc_id", "url", "text")
-                )
-                win_tbl = (
-                    fused_winnow_table(sig_new, cfg.sa_min_match_chars).unionByName(
-                        fused_winnow_table(old_sigs, cfg.sa_min_match_chars)
-                    )
-                    if fuse_win
-                    else None
-                )
-                cont = sa_verify_pairs(
-                    cand_sub,
-                    ex_all,
-                    cfg.sa_min_match_chars,
-                    cfg.sa_max_group_chars,
-                    winnow_tbl=win_tbl,
-                )
-                ver = ver.union(cont).distinct()
-            return ver
+            ch_new = _chunk_rows(sig_new)
+            ch_old = _chunk_rows(old_sigs).join(
+                ch_new.select("chunk_hash").distinct(), "chunk_hash", "left_semi"
+            )
+            ex_all = old_extracted.select("doc_id", "url", "text").unionByName(
+                ex_new.select("doc_id", "url", "text")
+            )
+            L = cfg.sa_min_match_chars
+            win_tbl = (
+                fused_winnow_table(sig_new, L).unionByName(fused_winnow_table(old_sigs, L))
+                if cfg.fuse_winnow
+                else None
+            )
+            cont = sa_verify_pairs(
+                substring_candidates(ch_new.unionByName(ch_old)), ex_all, L, winnow_tbl=win_tbl
+            )
+            return ver.union(cont).distinct()
 
         verified = self._stage(f"verified_{batch_id}", _verified, resume)
         self._metric(f"verified_{batch_id}", "rows", self._rows(f"verified_{batch_id}"))
@@ -792,6 +726,11 @@ class DedupPipeline:
         # base_suffix tracks the LATEST increment even when an older one is
         # merely resumed — resuming b1 after b2 ran must not regress it
         self.store.set_state(base_suffix=batches[-1], batches=batches)
+
+
+def _chunk_rows(signatures: DataFrame) -> DataFrame:
+    """(doc_id, chunk_hash) rows exploded JVM-side from the fused column."""
+    return signatures.select("doc_id", F.explode("chunk_hashes").alias("chunk_hash"))
 
 
 def dup_pair_recall(resolved: DataFrame, dup_truth: DataFrame) -> float:

@@ -1,4 +1,4 @@
-"""Suffix-array-based exact-substring dedup (SURVEY.md §7.2 S5).
+"""Exact-substring dedup (SURVEY.md §7.2 S5).
 
 Criterion (the standard one for training-data dedup, cf. "Deduplicating
 Training Data Makes Language Models Better": duplicated spans >= L): two
@@ -7,24 +7,22 @@ least ``min_match_chars`` characters. This catches containment pairs whose
 shingle-set Jaccard sits below the LSH threshold (|small|/|big|) and is
 robust to boilerplate wrapping (boilerplate stays well under L).
 
-Method (per group, numpy only):
-  1. concatenate the group's texts with '\\x00' sentinels;
-  2. suffix array via prefix doubling (np.unique ranks + np.lexsort,
+Pipeline path: CDC chunk candidates (chunking.substring_candidates, fed by
+the signature stage's fused chunk hashes) are decided by the winnowed
+L-gram verifier ``sa_verify_pairs`` — per-doc O(len) hashing plus JVM-side
+set intersection per pair, no per-host grouping, so cross-host containment
+is in scope and no group is a straggler.
+
+Test oracle: ``shared_substring_pairs_pandas`` decides the same criterion
+with a suffix array over the '\\x00'-joined texts (numpy only):
+  1. suffix array via prefix doubling (np.unique ranks + np.lexsort,
      O(N log^2 N), wholly vectorized);
-  3. LCP array (Kasai);
-  4. adjacent SA entries owned by different docs with
+  2. LCP of SA-adjacent suffixes by binary lifting over the doubling ranks;
+  3. adjacent SA entries owned by different docs with
      min(LCP, chars-to-own-doc-end of both suffixes) >= L emit an edge.
      Clamping at doc ends makes sentinel-crossing matches impossible.
      Suffixes sharing a >=L prefix form contiguous SA runs, so adjacent
-     pairs connect every doc in the run — transitively completed by the
-     connected-components stage downstream (exact, not a heuristic).
-
-Scale scoping (documented, honest): a single global suffix array over 100 TB
-is not a Spark-shaped computation; the pipeline applies this operator WITHIN
-GROUPS — same-host pages (where near-verbatim republication actually
-happens) via ``applyInPandas``, bounding each group to ``max_group_chars``.
-Cross-host substring overlap below the LSH threshold is out of scope of this
-layer by design.
+     pairs connect every doc in the run.
 """
 
 from __future__ import annotations
@@ -38,7 +36,6 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from ..plans.materialize import materialize
 
 DEFAULT_MIN_MATCH_CHARS = 200
-DEFAULT_MAX_GROUP_CHARS = 4_000_000
 
 
 def suffix_array_with_levels(
@@ -68,10 +65,6 @@ def suffix_array_with_levels(
         k *= 2
 
 
-def suffix_array(codes: np.ndarray) -> np.ndarray:
-    return suffix_array_with_levels(codes)[0]
-
-
 def lcp_adjacent_capped(
     sa: np.ndarray, levels: list[tuple[int, np.ndarray]], n: int
 ) -> np.ndarray:
@@ -97,20 +90,14 @@ def lcp_adjacent_capped(
     return lcp
 
 
-def lcp_array(codes: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """lcp[i] = LCP(suffix sa[i], suffix sa[i+1]); saturates at ~1023 (ample
-    for the >= min_match_chars tests; kept for API compatibility)."""
-    _, levels = suffix_array_with_levels(codes)
-    out = np.zeros(codes.size, dtype=np.int64)
-    out[: codes.size - 1] = lcp_adjacent_capped(sa, levels, codes.size)
-    return out
-
-
 def shared_substring_pairs_pandas(
     doc_ids: np.ndarray, texts: list[str], min_match_chars: int = DEFAULT_MIN_MATCH_CHARS
 ) -> list[tuple[int, int]]:
-    """[(doc_id_lo, doc_id_hi)] pairs sharing a verbatim substring >= L
-    within one group. Fully vectorized post-SA."""
+    """[(doc_id_lo, doc_id_hi)] edges between ``texts`` sharing a verbatim
+    substring >= L — the suffix-array test oracle for sa_verify_pairs.
+    Only SA-adjacent docs are paired, so over many texts the edges span
+    the relation's components rather than listing every pair; over two
+    texts they are exactly the pair or nothing. Fully vectorized post-SA."""
     n_docs = len(texts)
     if n_docs < 2:
         return []
@@ -141,9 +128,6 @@ def shared_substring_pairs_pandas(
         np.stack([np.minimum(a, b), np.maximum(a, b)], axis=1), axis=0
     )
     return [tuple(p) for p in pairs.tolist()]
-
-
-CONTAIN_SCHEMA = StructType([StructField("a", LongType()), StructField("b", LongType())])
 
 
 def _sliding_min_u64(h: np.ndarray, w: int) -> np.ndarray:
@@ -359,7 +343,6 @@ def sa_verify_pairs(
     candidates: DataFrame,
     extracted: DataFrame,
     min_match_chars: int = DEFAULT_MIN_MATCH_CHARS,
-    max_group_chars: int = DEFAULT_MAX_GROUP_CHARS,
     winnow_tbl: DataFrame | None = None,
 ) -> DataFrame:
     """Verify candidate edges (a, b): keep exactly the pairs sharing a
@@ -385,9 +368,9 @@ def sa_verify_pairs(
          them off the decided pairs is most of this operator's cost model.
 
     Per-doc work is O(len) in both phases; per-pair work is JVM-side set
-    intersection of pre-sorted hash arrays. The suffix-array layer remains
-    the engine of the host-grouped containment mode (containment_edges
-    below). ``max_group_chars`` is retained for signature compatibility.
+    intersection of pre-sorted hash arrays. The result equals the
+    suffix-array oracle (shared_substring_pairs_pandas) on every pair it
+    is given, up to the 2^-64 per-pair hash-collision probability.
 
     ``winnow_tbl``: optional PRECOMPUTED (doc_id, h, hc) fingerprint table
     — normally the fused columns the signature stage emitted from its own
@@ -514,41 +497,3 @@ def hash_overlap_join(pairs: DataFrame, htbl: DataFrame) -> DataFrame:
         .filter(F.arrays_overlap("h_a", "h_b"))
         .select("a", "b")
     )
-
-
-def containment_edges(
-    extracted: DataFrame,
-    group_col,
-    min_match_chars: int = DEFAULT_MIN_MATCH_CHARS,
-    max_group_chars: int = DEFAULT_MAX_GROUP_CHARS,
-) -> DataFrame:
-    """Grouped suffix-array substring dedup: (doc_id, text) grouped by
-    ``group_col`` (an expression, e.g. the url host) -> edges (a, b).
-    Oversized groups keep their longest docs up to ``max_group_chars``
-    (containers are long; the cap is logged via lineage metrics, never
-    silently unbounded)."""
-    grouped = extracted.select(
-        F.col("doc_id"), F.col("text"), group_col.alias("__grp")
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        total = int(pdf["text"].str.len().sum())
-        if total > max_group_chars:
-            order = pdf["text"].str.len().sort_values(ascending=False).index
-            keep, acc = [], 0
-            for i in order:
-                ln = len(pdf.loc[i, "text"])
-                if acc + ln > max_group_chars:
-                    continue
-                acc += ln
-                keep.append(i)
-            pdf = pdf.loc[sorted(keep)]
-        pairs = shared_substring_pairs_pandas(
-            pdf["doc_id"].to_numpy(), pdf["text"].tolist(), min_match_chars
-        )
-        return pd.DataFrame(pairs, columns=["a", "b"]) if pairs else pd.DataFrame(
-            {"a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64")}
-        )
-
-    return grouped.groupBy("__grp").applyInPandas(run, schema=CONTAIN_SCHEMA).distinct()

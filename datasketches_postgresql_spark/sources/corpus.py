@@ -9,7 +9,7 @@ pairs:
     exact     — verbatim text under a different url (~5%)
     near      — ~2% of words replaced (char-shingle Jaccard >= ~0.9) (~5%)
     substring — one page's text is a contiguous slice of another's, same
-                host (~2%; the suffix-array layer's target)
+                host (~2%; the exact-substring layer's target)
 Negatives: same-host pages share only per-host boilerplate (the precision
 trap — must NOT pair).
 

@@ -56,14 +56,6 @@ def word_ngrams(text: Column, n: int = 2) -> Column:
     )
 
 
-def ngram_jaccard(a: Column, b: Column) -> Column:
-    """Jaccard over two n-gram arrays — array_intersect/array_union are
-    set-semantic natives."""
-    i = F.size(F.array_intersect(a, b))
-    u = F.size(F.array_union(a, b))
-    return i / F.greatest(u, F.lit(1))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,

@@ -45,6 +45,11 @@ def hash_split(
     Assignment boundaries are cumulative in the given dict order, so
     ``{"train": .98, "val": .01, "test": .01}`` puts bucket [0, .98) in
     train, [.98, .99) in val, [.99, 1) in test.
+
+    The boundaries are cumulative Python float sums taken in dict order
+    (``.98 + .01`` is not exactly ``.99``), so replaying a split in another
+    engine must accumulate the same weights in the same order to land rows
+    on the same side of each boundary.
     """
     total = sum(weights.values())
     if not 0.999 <= total <= 1.001:
@@ -100,7 +105,12 @@ def mix_sources(
     source value -> keep fraction in [0, 1]; sources not listed keep
     ``default_rate`` (0 = dropped). Built on weighted_sample, so the mix
     is reproducible row-for-row across runs and layouts, and an
-    incremental batch mixes exactly as the full corpus would."""
+    incremental batch mixes exactly as the full corpus would.
+
+    Unlike hash_split, nothing is accumulated: each row's bucket is
+    compared against its source's weight as given (a Python float), so a
+    replay in another engine needs the same bucket function and the same
+    float64 weights, in any order."""
     for s, w in weights.items():
         if not 0.0 <= w <= 1.0:
             raise ValueError(f"weight for {s!r} must be in [0, 1], got {w}")

@@ -10,9 +10,9 @@ from datasketches_postgresql_spark.dedup.minhash import (
 )
 from datasketches_postgresql_spark.dedup.shingle import shingle_hash_batch
 from datasketches_postgresql_spark.dedup.suffix import (
-    lcp_array,
+    lcp_adjacent_capped,
     shared_substring_pairs_pandas,
-    suffix_array,
+    suffix_array_with_levels,
 )
 
 
@@ -71,12 +71,12 @@ class TestMinhash:
         rng = np.random.default_rng(1)
         docs = [rng.integers(0, 2**63, rng.integers(5, 500), dtype=np.uint64) for _ in range(40)]
         full = minhash_signatures(docs)
-        old = mh._CHUNK_ELEMS
+        old = mh._BLOCK_SHINGLES
         try:
-            mh._CHUNK_ELEMS = 128 * 16  # force many tiny chunks
+            mh._BLOCK_SHINGLES = 16  # force many tiny blocks
             chunked = minhash_signatures(docs)
         finally:
-            mh._CHUNK_ELEMS = old
+            mh._BLOCK_SHINGLES = old
         assert np.array_equal(full, chunked)
 
     def test_simhash_hamming(self):
@@ -95,11 +95,75 @@ class TestMinhash:
 class TestSuffixArray:
     def test_suffix_array_banana(self):
         codes = np.frombuffer("banana".encode("utf-32-le"), dtype="<u4").astype(np.int64)
-        sa = suffix_array(codes)
+        sa, levels = suffix_array_with_levels(codes)
         # suffixes sorted: a(5) ana(3) anana(1) banana(0) na(4) nana(2)
         assert sa.tolist() == [5, 3, 1, 0, 4, 2]
-        lcp = lcp_array(codes, sa)
-        assert lcp.tolist()[:5] == [1, 3, 0, 0, 2]
+        lcp = lcp_adjacent_capped(sa, levels, codes.size)
+        assert lcp.tolist() == [1, 3, 0, 0, 2]
+
+    def test_verifier_matches_suffix_array_oracle(self, spark):
+        """Differential: the pipeline's winnowed L-gram verifier
+        (sa_verify_pairs, with its own fingerprints and with the signature
+        stage's fused ones) keeps exactly the pairs the suffix-array oracle
+        finds, over ALL pairs of a corpus built around the decision
+        boundary: shared spans of L-1, L and L+w chars, docs shorter than
+        the winnow gram, boilerplate-wrapped containment, and docs sharing
+        only sub-L boilerplate."""
+        from itertools import combinations
+
+        from datasketches_postgresql_spark.dedup.minhash import signature_stage
+        from datasketches_postgresql_spark.dedup.suffix import (
+            fused_winnow_table,
+            sa_verify_pairs,
+            winnow_params,
+        )
+
+        rng = np.random.default_rng(17)
+        L = 200
+        _, w = winnow_params(L)
+        # spans and the two fillers use pairwise disjoint alphabets, so a
+        # planted span's match length is exactly its own length
+        draw = lambda abc, n: "".join(rng.choice(list(abc), size=n))  # noqa: E731
+        span = lambda n: draw("abcdefgh ", n)  # noqa: E731
+        fa = lambda n: draw("stuv", n)  # noqa: E731
+        fb = lambda n: draw("wxyz", n)  # noqa: E731
+        s_short, s_exact, s_long = span(L - 1), span(L), span(L + w)
+        body = span(1200)
+        header, footer = "site nav home | " + span(60), span(80) + " | copyright"
+        texts = [
+            fa(300) + s_short + fa(100), s_short + fb(250),
+            fa(40) + s_exact + fa(300), fb(500) + s_exact,
+            s_long + fa(10), fb(220) + s_long + fb(220),
+            f"{header} {body} {footer}", f"{header} {body[300:900]} {footer}",
+            f"{header} {fa(900)} {footer}", f"{header} {fb(900)} {footer}",
+            "x", "x", fa(120), span(L - w),
+            body, fb(700),
+        ]
+        ids = np.arange(1, len(texts) + 1) * 10
+        pairs = [(int(a), int(b)) for a, b in combinations(ids, 2)]
+        # the oracle per pair: over a whole group it emits only SA-adjacent
+        # edges (connectivity, not every pair)
+        text_of = dict(zip(ids.tolist(), texts))
+        want = sorted(
+            (a, b)
+            for a, b in pairs
+            if shared_substring_pairs_pandas(np.array([a, b]), [text_of[a], text_of[b]], L)
+        )
+        assert {(30, 40), (50, 60), (70, 80), (70, 150), (80, 150)} <= set(want)
+        assert (10, 20) not in want and (90, 100) not in want
+
+        extracted = spark.createDataFrame(
+            [(int(i), t, f"https://h{i}.example/") for i, t in zip(ids, texts)],
+            "doc_id long, text string, url string",
+        )
+        cands = spark.createDataFrame(pairs, "a long, b long")
+        fused = fused_winnow_table(signature_stage(extracted, winnow_chars=L), L)
+        for tbl in (None, fused):
+            got = sorted(
+                tuple(r)
+                for r in sa_verify_pairs(cands, extracted, L, winnow_tbl=tbl).collect()
+            )
+            assert got == want, ("fused" if tbl is not None else "unfused", got)
 
     def test_containment_detection(self):
         container = " ".join(f"tok{i:04d}" for i in range(200))

@@ -156,28 +156,6 @@ class TestDistributedTruth:
                 assert texts[r["url_b"]] in texts[r["url_a"]]
 
 
-class TestFusedCdc:
-    def test_fused_and_unfused_resolved_identical(self, spark, tmp_path):
-        from datasketches_postgresql_spark.dedup.pipeline import (
-            DedupConfig,
-            DedupPipeline,
-        )
-        from datasketches_postgresql_spark.sources.corpus import generate_corpus
-
-        pages, _ = generate_corpus(spark, 1500, partitions=8)
-        outs = {}
-        for fuse in (True, False):
-            pipe = DedupPipeline(
-                spark, str(tmp_path / f"ck_{fuse}"), DedupConfig(fuse_cdc=fuse)
-            )
-            res = pipe.run(pages, resume=False)["resolved"]
-            outs[fuse] = sorted(
-                (r["doc_id"], r["cluster_id"], r["is_representative"])
-                for r in res.collect()
-            )
-        assert outs[True] == outs[False]
-
-
 class TestFusedWinnow:
     def test_fused_and_unfused_verified_identical(self, spark, tmp_path):
         """fuse_winnow moves the verify stage's fingerprint hashing into the

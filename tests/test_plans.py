@@ -121,7 +121,7 @@ class TestPlanQuality:
             "doc_id long, chunk_hashes array<bigint>",
         )
         ch = sigs.select("doc_id", F.explode("chunk_hashes").alias("chunk_hash"))
-        q = substring_candidates(None, chunks=ch)
+        q = substring_candidates(ch)
         plan = formatted_plan(q)
         assert "EvalPython" not in plan, plan
 
