@@ -41,7 +41,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Default: every CPU this process may run on (``nproc``), never a fixed count.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "160000"))
 WARM_DOCS = int(os.environ.get("SPARK_GRAFT_WARM_DOCS", "48000"))
 # Scaling pair measures the SAME job on the SAME input at both levels (the

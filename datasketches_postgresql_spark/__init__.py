@@ -25,10 +25,10 @@ Layers
 - ``streaming``  : Structured Streaming variants (watermarked streaming dedup).
 """
 
-from ._alloc import retain_heap as _retain_heap
+from ._worker import setup_worker as _setup_worker
 
-# Warm-heap tuning: no-op unless this process IS a Spark Python worker (or
-# SPARK_GRAFT_RETAIN_HEAP=1) — see _alloc.retain_heap.
-_retain_heap()
+# Warm-heap tuning and lazy zipimport invalidation: no-ops unless this
+# process IS a Spark Python worker — see _worker.py.
+_setup_worker()
 
 __version__ = "0.1.0"

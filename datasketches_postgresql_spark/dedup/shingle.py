@@ -21,7 +21,8 @@ _BASE = np.uint64(0x100000001B3)  # FNV-ish odd multiplier
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """Allocation-light: one output array + one scratch (in-place ufuncs) —
     the naive expression allocates ~7 temporaries per call, which under
-    concurrent workers stalls on this VM's page-fault path (see _alloc.py)."""
+    concurrent workers stalls on this VM's page-fault path (see
+    _worker.retain_heap)."""
     z = x.astype(np.uint64, copy=True)
     t = np.empty_like(z)
     with np.errstate(over="ignore"):

@@ -222,7 +222,8 @@ def winnow_pair_fingerprints(text: str, min_match_chars: int) -> tuple[np.ndarra
 # Sub-block size for the batched winnow kernel, in codepoints. A whole
 # 10k-doc Arrow batch concatenates to ~100+ MB per u64 temporary — past
 # glibc's 32 MiB mmap-threshold cap, so EVERY call would mmap and pay this
-# VM's slow first-touch page faults (the cost _alloc.py exists to avoid).
+# VM's slow first-touch page faults (the cost _worker.retain_heap exists to
+# avoid).
 # 2M codepoints keeps each temporary ~16 MB: heap-retained and reused
 # across sub-batches, while still amortizing numpy call overhead over
 # ~1.4k docs per block (the per-call overhead the batching removes is

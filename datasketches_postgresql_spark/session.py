@@ -65,7 +65,7 @@ def get_spark(
         # Fault the JVM heap in ONCE at startup: this VM's page-fault path is
         # slow (~8x vs warm pages) and contended under concurrency, so lazy
         # heap growth mid-shuffle shows up as mysterious JVM-stage slowness.
-        # (Python-worker equivalent: _alloc.retain_heap at package import.)
+        # (Python-worker equivalent: _worker.retain_heap at package import.)
         .config(
             "spark.driver.extraJavaOptions",
             "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g") + " -XX:+AlwaysPreTouch",

@@ -82,12 +82,15 @@ def _coupons_from_hashes(values: np.ndarray, lg_k: int) -> np.ndarray:
             - np.uint64(1023)).astype(np.uint32)
     cols = np.minimum(cols, np.uint32(min(_MAX_COL, 64 - lg_k - 1 + lg_k)))
     raw = (rows.astype(np.uint32) << np.uint32(6)) | cols.astype(np.uint32)
-    # dedup by O(k+n) scatter into the 2^(lg_k+6)-slot coupon space when
-    # the flag array stays small (<= 2 MiB through lg_k 15); at larger
-    # lg_k the per-batch alloc + full scan would dwarf the batch (4 GiB
-    # at the format max lg_k 26), so fall back to np.unique's sort there
-    if lg_k <= 15:
-        seen = np.zeros(1 << (lg_k + 6), dtype=bool)
+    # dedup by O(slots+n) scatter into the 2^(lg_k+6)-slot coupon space
+    # once the batch fills at least half of it: below that, zeroing and
+    # scanning the flag array costs more than np.unique's sort (measured
+    # crossover at ~slots/2 for lg_k 11 and 15; 100 values at lg_k 11:
+    # 50 us scatter vs 8 us sort), and the flag array never outgrows the
+    # batch itself
+    slots = 1 << (lg_k + 6)
+    if 2 * raw.size >= slots:
+        seen = np.zeros(slots, dtype=bool)
         seen[raw] = True
         return np.nonzero(seen)[0].astype(np.uint32)
     return np.unique(raw)
@@ -147,17 +150,23 @@ def deserialize(buf: bytes) -> tuple[int, np.ndarray]:
     return lg_k, np.frombuffer(buf, dtype="<u8", offset=3).copy()
 
 
+def _is_sparse(n_coupons: int, k: int) -> bool:
+    """Sparse image when the coupon list is smaller than the k-row matrix."""
+    return n_coupons * 4 + 4 < k * 8 and n_coupons <= 2 * k
+
+
 def _pack(lg_k: int, dense: np.ndarray, compat: bool = False) -> bytes:
-    n_coupons = popcount64(dense)
-    if n_coupons * 4 + 4 < dense.size * 8 and n_coupons <= 2 * dense.size:
+    if _is_sparse(popcount64(dense), dense.size):
         return serialize(lg_k, _coupons_from_dense(dense), None, compat)
     return serialize(lg_k, None, dense, compat)
 
 
 def build(values: np.ndarray, lg_k: int = DEFAULT_LG_K) -> bytes:
     """Build from pre-hashed uint64 values."""
-    coupons = _coupons_from_hashes(values, lg_k)
-    return _pack(lg_k, _dense_from_coupons(coupons, lg_k))
+    coupons = _coupons_from_hashes(values, lg_k)  # sorted and unique
+    if _is_sparse(coupons.size, 1 << lg_k):
+        return serialize(lg_k, coupons, None)
+    return serialize(lg_k, None, _dense_from_coupons(coupons, lg_k))
 
 
 def union(sketches: list[bytes], lg_k: int | None = None) -> bytes:

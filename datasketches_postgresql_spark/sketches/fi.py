@@ -47,6 +47,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pandas as pd
 
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
@@ -68,11 +69,14 @@ class FiState:
 
     def update(self, values, weights=None) -> None:
         if weights is None:
-            uniq, counts = np.unique(np.asarray(values, dtype=object), return_counts=True)
-            agg = zip(uniq.tolist(), counts.tolist())
+            # hash-factorize, then sort only the uniques: items are inserted
+            # in sorted order (the serialized image depends on it) without
+            # np.unique's comparison sort over every value; None gets code -1
+            codes, uniq = pd.factorize(np.asarray(values, dtype=object))
+            counts = np.bincount(codes[codes >= 0], minlength=len(uniq))
+            order = np.argsort(uniq)
+            agg = zip(uniq[order].tolist(), counts[order].tolist())
         else:
-            import pandas as pd
-
             agg = (
                 pd.Series(np.asarray(weights, dtype=np.int64), index=values)
                 .groupby(level=0)

@@ -93,3 +93,56 @@ class TestRoundTrip:
 
         with pytest.raises(ValueError):
             I.deserialize(b"\x02\x01\x0f\x00\x00\x00\x00\x00")  # KLL family byte
+
+
+def _old_update(st, values):
+    """Transcription of the unweighted FiState.update before factorization:
+    np.unique over the object array, uniques inserted in sorted order."""
+    uniq, counts = np.unique(np.asarray(values, dtype=object), return_counts=True)
+    for s, w in zip(uniq.tolist(), counts.tolist()):
+        if s is None:
+            continue
+        st.total += int(w)
+        slot = st.items.get(s)
+        if slot is None:
+            st.items[s] = [int(w) + st.offset, st.offset]
+        else:
+            slot[0] += int(w)
+    st._purge_if_needed()
+
+
+def _zipf_strings(n, seed):
+    ranks = np.minimum(np.random.default_rng(seed).zipf(1.1, size=n), 8192)
+    return np.char.add("v", ranks.astype("U6")).astype(object)
+
+
+class TestUpdateBytesUnchanged:
+    def test_build_matches_old_update(self):
+        """Exact and purged regimes (lg_k 14 holds every item, lg_k 9 and 4
+        purge) give the old images byte for byte."""
+        for lg_k in (4, 9, 14):
+            for n in (0, 1, 100, 10_000, 100_000):
+                vals = _zipf_strings(n, n)
+                old = FI.FiState(lg_k)
+                _old_update(old, vals)
+                assert FI.build(lg_k, vals) == old.serialize(), (lg_k, n)
+
+    def test_repeated_updates_match(self):
+        """Updates into a state that already tracks items and carries an
+        offset from earlier purges."""
+        new, old = FI.FiState(5), FI.FiState(5)
+        for seed in range(6):
+            vals = _zipf_strings(3_000, 50 + seed)
+            new.update(vals)
+            _old_update(old, vals)
+            assert new.offset > 0 or seed == 0
+            assert new.serialize() == old.serialize(), seed
+
+    def test_unicode_and_none(self):
+        vals = ["héllo", "wörld", "", "héllo", "日本", "Z", "a", "日本", "héllo"]
+        old = FI.FiState(6)
+        _old_update(old, vals)
+        assert FI.build(6, vals) == old.serialize()
+        # None is skipped (np.unique could not sort it next to strings)
+        assert FI.build(6, vals[:4] + [None] + vals[4:]) == FI.build(6, vals)
+        assert FI.build(6, [None]) == FI.build(6, [])
